@@ -466,7 +466,8 @@ def triangle_counts(
     the MEASURED canonical-edge count (one cheap count over the
     already-persisted edge frame, `_graph_shuffle_target`), clamped to
     the session default -- data-derived sizing instead of a caller
-    literal, a no-op above ~default*64k edges."""
+    literal, a no-op above ~default * _EDGE_ROWS_PER_SHUFFLE_PARTITION
+    edges."""
     if shuffle_partitions == "auto":
         return _triangle_counts_impl(edges, src_col, dst_col, auto=True)
     with _shuffle_override(edges.sparkSession, shuffle_partitions):
@@ -613,6 +614,8 @@ def _lpa_driver(spark, sym_tbl, n_iter):
 
     nodes, a_idx, b_idx = _lex_indexed_sym(sym_tbl)
     n = len(nodes)
+    if n == 0:  # the per-node argmax below indexes a first vote
+        return spark.createDataFrame([], "node string, label string")
     lab = np.arange(n, dtype=np.int64)  # own id; index order == lex order
     for _ in range(n_iter):
         votes = a_idx * n + lab[b_idx]
@@ -768,7 +771,8 @@ def _kcore_driver(spark, sym_tbl, max_iter, stats_out):
     cur = np.bincount(a_idx, minlength=n).astype(np.int64)  # degree init
     rounds_run = 0
     converged = n == 0
-    for _ in range(max_iter):
+    # an empty graph is its own fixpoint, and reduceat rejects empty input
+    for _ in range(max_iter if n else 0):
         v = cur[b_idx]
         order = np.lexsort((-v, a_idx))  # by node, value desc
         va, aa = v[order], a_idx[order]

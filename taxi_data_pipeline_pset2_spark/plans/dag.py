@@ -6,6 +6,11 @@ Materialization is per-node: ``table`` writes parquet into the warehouse
 dir (optionally partitioned+sorted -- the X1 clustering equivalent) and
 re-reads it, so downstream nodes scan materialized storage exactly like
 dbt's table materialization; ``ephemeral`` passes the lazy plan through.
+Materializing a table runs no job beyond the write (and the broadcasts
+its plan needs): the row count comes from an ``Observation`` on the
+written frame, and the re-read takes the frame's own schema, so neither
+a count nor a parquet footer scan follows the write, and a partition
+column keeps its type instead of one inferred from directory names.
 
 Execution is sequential in topological order by default -- within each
 node Spark already parallelizes across all cores, so node-level
@@ -25,7 +30,9 @@ from collections.abc import Callable
 from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 @dataclass(frozen=True)
@@ -96,7 +103,8 @@ class Pipeline:
             rows = None
             if node.materialization == "table":
                 path = f"{self.warehouse_dir}/{node.name}"
-                writer = df
+                written = Observation()
+                writer = df.observe(written, F.count(F.lit(1)).alias("rows"))
                 if node.sort_within_partitions_by:
                     writer = writer.sortWithinPartitions(
                         *node.sort_within_partitions_by
@@ -105,8 +113,12 @@ class Pipeline:
                 if node.partition_by:
                     w = w.partitionBy(*node.partition_by)
                 w.parquet(path)
-                df = spark.read.parquet(path)
-                rows = df.count()
+                rows = written.get["rows"]
+                # partition columns go last, as Spark puts them when it
+                # finds partition directories -- an empty node has none
+                data = [f for f in df.schema if f.name not in node.partition_by]
+                parts = [df.schema[c] for c in node.partition_by]
+                df = spark.read.schema(StructType(data + parts)).parquet(path)
             t1 = time.perf_counter()
             return df, NodeResult(
                 node.name, "success", t1 - t0, rows, started_at=t0, finished_at=t1

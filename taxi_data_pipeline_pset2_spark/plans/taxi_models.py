@@ -14,7 +14,8 @@ Physical notes for scale: every join in fct_trips is a broadcast against
 a <=4018-row dim (SURVEY.md X5); gold is written partitioned by
 service_type and sorted within partitions by pickup_date -- the Spark
 equivalent of the reference's Snowflake ``cluster_by`` (SURVEY.md X1,
-the 16.3x speedup in BASELINE.md).
+the 16.3x speedup in BASELINE.md). The static dims and dim_zone's
+Unknown member are SQL VALUES relations (``_values``).
 
 PARITY EXCLUSIONS -- columns that intentionally deviate from the
 reference's row-level output (each documented inline at its definition;
@@ -42,6 +43,21 @@ from taxi_data_pipeline_pset2_spark.functions.scalars import (
 from taxi_data_pipeline_pset2_spark.sources.schemas import SILVER_COLUMNS
 
 DATE_RANGE = ("2015-01-01", "2025-12-31")  # dbt vars (dbt_project.yml:38-40)
+
+
+def _values(spark: SparkSession, columns: str, *rows: str) -> DataFrame:
+    """Literal rows as a SQL VALUES relation, which plans as a local
+    table scan (``createDataFrame`` over a Python list plans a Python RDD
+    and starts a Python worker to read a few rows). The extra all-NULL
+    row, dropped by the WHERE, keeps every column nullable as the
+    reference's are: an all-literal column is NOT NULL and would be
+    written as a REQUIRED parquet column."""
+    names = [c.strip() for c in columns.split(",")]
+    nulls = ", ".join(["NULL"] * len(names))
+    return spark.sql(
+        f"SELECT * FROM VALUES {', '.join(rows)}, ({nulls}) AS t({columns}) "
+        f"WHERE {names[0]} IS NOT NULL"
+    )
 
 
 def stg_trips_unified(yellow: DataFrame, green: DataFrame) -> DataFrame:
@@ -73,17 +89,18 @@ def stg_trips_unified(yellow: DataFrame, green: DataFrame) -> DataFrame:
 
 def dim_date(spark: SparkSession) -> DataFrame:
     """Date spine 2015-01-01..2025-12-31 (4018 rows) with calendar
-    attributes + ROW_NUMBER surrogate key (``dim_date.sql:6-60``; the
-    recursive CTE becomes sequence+explode -- SURVEY.md section 7 item 3).
-    Unpartitioned window is safe at dim size only."""
-    spine = spark.range(1).select(
-        F.explode(
-            F.sequence(F.to_date(F.lit(DATE_RANGE[0])), F.to_date(F.lit(DATE_RANGE[1])))
-        ).alias("date_actual")
+    attributes + surrogate key (``dim_date.sql:6-60``; the recursive CTE
+    becomes sequence+explode -- SURVEY.md section 7 item 3). The spine is
+    contiguous, so the reference's ROW_NUMBER over date_actual is the day
+    offset from the first date plus one: no window, no shuffle."""
+    start = F.to_date(F.lit(DATE_RANGE[0]))
+    # one partition: the write of a multi-partition range adds an empty file
+    spine = spark.range(0, 1, numPartitions=1).select(
+        F.explode(F.sequence(start, F.to_date(F.lit(DATE_RANGE[1])))).alias("date_actual")
     )
     d = F.col("date_actual")
     return spine.select(
-        F.row_number().over(Window.orderBy("date_actual")).alias("date_sk"),
+        (F.datediff(d, start) + 1).alias("date_sk"),
         d,
         F.year(d).alias("year_actual"),
         F.quarter(d).alias("quarter_actual"),
@@ -137,10 +154,10 @@ def dim_zone(zones: DataFrame) -> DataFrame:
         service_zone_clean.alias("service_zone"),
         is_airport.alias("is_airport"),
     )
-    unknown = zones.sparkSession.createDataFrame(
-        [(0, -1, "Unknown", "Unknown", "Unknown", False)],
-        schema="zone_sk int, locationid int, borough string, zone_name string, "
-        "service_zone string, is_airport boolean",
+    unknown = _values(
+        zones.sparkSession,
+        "zone_sk, locationid, borough, zone_name, service_zone, is_airport",
+        "(0, -1, 'Unknown', 'Unknown', 'Unknown', FALSE)",
     )
     return cleaned.unionByName(unknown).withColumn(
         "dbt_loaded_at", F.current_timestamp()
@@ -149,35 +166,31 @@ def dim_zone(zones: DataFrame) -> DataFrame:
 
 def dim_payment_type(spark: SparkSession) -> DataFrame:
     """VALUES dim (``dim_payment_type.sql:7-32``; operator S9)."""
-    rows = [
-        (1, 1, "Credit card", True),
-        (2, 2, "Cash", False),
-        (3, 3, "No charge", False),
-        (4, 4, "Dispute", False),
-        (5, 5, "Unknown", False),
-        (6, 6, "Voided trip", False),
-        (0, -1, "Not specified", False),
-    ]
-    return spark.createDataFrame(
-        rows,
-        schema="payment_type_sk int, payment_type_id int, payment_type_name string, "
-        "expects_tip boolean",
+    return _values(
+        spark,
+        "payment_type_sk, payment_type_id, payment_type_name, expects_tip",
+        "(1, 1, 'Credit card', TRUE)",
+        "(2, 2, 'Cash', FALSE)",
+        "(3, 3, 'No charge', FALSE)",
+        "(4, 4, 'Dispute', FALSE)",
+        "(5, 5, 'Unknown', FALSE)",
+        "(6, 6, 'Voided trip', FALSE)",
+        "(0, -1, 'Not specified', FALSE)",
     ).withColumn("dbt_loaded_at", F.current_timestamp())
 
 
 def dim_rate_code(spark: SparkSession) -> DataFrame:
     """VALUES dim (``dim_rate_code.sql:12-21``; operator S9)."""
-    rows = [
-        (1, 1, "Standard rate"),
-        (2, 2, "JFK"),
-        (3, 3, "Newark"),
-        (4, 4, "Nassau or Westchester"),
-        (5, 5, "Negotiated fare"),
-        (6, 6, "Group ride"),
-        (0, -1, "Unknown"),
-    ]
-    return spark.createDataFrame(
-        rows, schema="rate_code_sk int, rate_code_id int, rate_code_name string"
+    return _values(
+        spark,
+        "rate_code_sk, rate_code_id, rate_code_name",
+        "(1, 1, 'Standard rate')",
+        "(2, 2, 'JFK')",
+        "(3, 3, 'Newark')",
+        "(4, 4, 'Nassau or Westchester')",
+        "(5, 5, 'Negotiated fare')",
+        "(6, 6, 'Group ride')",
+        "(0, -1, 'Unknown')",
     ).withColumn("dbt_loaded_at", F.current_timestamp())
 
 

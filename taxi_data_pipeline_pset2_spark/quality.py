@@ -12,13 +12,24 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+def _row_violations(df: DataFrame, predicate: Column, label: Column) -> DataFrame:
+    """Violation frame of a row-level test: ``df``'s rows where
+    ``predicate`` holds. The frame keeps ``(df, predicate)`` so that
+    ``run_tests`` can check every row-level test on one table in one
+    scan of it."""
+    violations = df.filter(predicate).select(label)
+    violations._row_test = (df, predicate)
+    return violations
+
+
 def not_null(df: DataFrame, col: str) -> DataFrame:
-    return df.filter(F.col(col).isNull()).select(F.lit(col).alias("column"))
+    return _row_violations(df, F.col(col).isNull(), F.lit(col).alias("column"))
 
 
 def unique(df: DataFrame, col: str) -> DataFrame:
@@ -42,9 +53,10 @@ def accepted_values(df: DataFrame, col: str, values: Sequence) -> DataFrame:
     -- compose with not_null when both are required. r11 fix: NULLs
     were previously flagged here too, double-covering not_null's
     concern and diverging from dbt."""
-    return df.filter(
-        F.col(col).isNotNull() & ~F.col(col).isin(list(values))
-    ).select(F.col(col).cast("string").alias("unexpected_value"))
+    c = F.col(col)
+    return _row_violations(
+        df, c.isNotNull() & ~c.isin(list(values)), c.cast("string").alias("unexpected_value")
+    )
 
 
 def relationships(child: DataFrame, child_col: str, parent: DataFrame, parent_col: str) -> DataFrame:
@@ -64,19 +76,36 @@ class TestResult:
 
 
 def run_tests(cases: dict[str, DataFrame]) -> list[TestResult]:
-    """Run the whole suite as ONE Spark job: every violation frame is
-    projected to a tagged literal and unioned, then a single aggregate
-    counts failures per test. With 32 per-test ``count()`` actions the
-    scheduler overhead dominates and each test re-plans its inputs; one
-    unioned job lets Spark share scans between tests over the same table
-    and round-trips the cluster once."""
+    """Count every test's violating rows with one aggregate: each test's
+    violations become rows tagged with the test's name, the tagged rows
+    of all tests are unioned, and a single group-by counts them per
+    name. Row-level tests (``not_null``, ``accepted_values``) on the
+    same table share one scan of it: each row is tagged with the names
+    of all the tests it fails (an exploded array of
+    ``when(predicate, name)`` with the NULLs dropped). One ``collect``
+    starts the aggregate; Spark adds a job for each broadcast and
+    shuffle stage the plan needs (the relationships tests broadcast
+    their dims)."""
     if not cases:
         return []
-    it = iter(cases.items())
-    name0, v0 = next(it)
-    unioned = v0.select(F.lit(name0).alias("_test_name"))
-    for name, violations in it:
-        unioned = unioned.unionByName(violations.select(F.lit(name).alias("_test_name")))
+    tagged: list[DataFrame] = []
+    row_tests: dict[int, tuple[DataFrame, list[Column]]] = {}
+    for name, violations in cases.items():
+        origin = vars(violations).get("_row_test")
+        if origin is None:
+            tagged.append(violations.select(F.lit(name).alias("_test_name")))
+        else:
+            table, predicate = origin
+            row_tests.setdefault(id(table), (table, []))[1].append(
+                F.when(predicate, F.lit(name))
+            )
+    for table, tags in row_tests.values():
+        tagged.append(
+            table.select(F.explode(F.array(*tags)).alias("_test_name")).filter(
+                F.col("_test_name").isNotNull()
+            )
+        )
+    unioned = reduce(DataFrame.unionByName, tagged)
     counts = {
         r["_test_name"]: r["n"]
         for r in unioned.groupBy("_test_name").agg(F.count("*").alias("n")).collect()

@@ -20,7 +20,8 @@ from taxi_data_pipeline_pset2_spark.queries.catalog import query
 # r9-r13 rounds passed a literal 8 here; since r14 every graph entry
 # passes shuffle_partitions="auto" and the OPERATOR derives the width
 # from its own measured edge count (operators/graph.py
-# _graph_shuffle_target: clamp(ceil(edges/64k), 2, session default)) --
+# _graph_shuffle_target: clamp(ceil(edges /
+# _EDGE_ROWS_PER_SHUFFLE_PARTITION), 2, session default)) --
 # data-derived, never a semantics knob, and a no-op at real scale where
 # the clamp lands on the cluster-tuned default (VERDICT r13 #4).
 
@@ -621,31 +622,34 @@ def _pagerank_oracle(n_iter: int = 8, damping: float = 0.85, limit: int = 25) ->
     expression left-associated exactly as the Spark column expression,
     and the final 8-dp rounding via the shared scaled-bigint discipline.
     The only cross-engine difference left is double SUM order, whose
-    ~1e-16 noise is 7 orders of magnitude under the rounding grain."""
+    ~1e-16 noise is 7 orders of magnitude under the rounding grain.
+    Every CTE is AS MATERIALIZED: each round reads the previous one
+    twice, so an inlined chain doubles per round and exhausts DuckDB's
+    memory (the _kcore_oracle lesson)."""
     tele = repr(1.0 - damping)
     d = repr(damping)
     parts = [
-        """edges AS (
+        """edges AS MATERIALIZED (
             SELECT 's' || l_suppkey AS src, 'c' || o_custkey AS dst,
                    CAST(1 AS DOUBLE) AS w
             FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-        nn AS (SELECT count(*) AS n FROM nodes),
-        deg AS (SELECT src, sum(w) AS deg FROM edges GROUP BY src),
-        r0 AS (SELECT node, CAST(1 AS DOUBLE) / nn.n AS rank
+        nodes AS MATERIALIZED (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
+        nn AS MATERIALIZED (SELECT count(*) AS n FROM nodes),
+        deg AS MATERIALIZED (SELECT src, sum(w) AS deg FROM edges GROUP BY src),
+        r0 AS MATERIALIZED (SELECT node, CAST(1 AS DOUBLE) / nn.n AS rank
                FROM nodes CROSS JOIN nn)"""
     ]
     prev = "r0"
     for k in range(1, n_iter + 1):
         parts.append(
-            f"""d{k} AS (SELECT coalesce(sum(r.rank), CAST(0 AS DOUBLE)) AS dang
+            f"""d{k} AS MATERIALIZED (SELECT coalesce(sum(r.rank), CAST(0 AS DOUBLE)) AS dang
                  FROM {prev} r LEFT JOIN deg ON r.node = deg.src
                  WHERE deg.src IS NULL),
-        c{k} AS (SELECT e.dst AS node, sum(r.rank * e.w / dg.deg) AS contrib
+        c{k} AS MATERIALIZED (SELECT e.dst AS node, sum(r.rank * e.w / dg.deg) AS contrib
                  FROM edges e JOIN {prev} r ON e.src = r.node
                       JOIN deg dg ON e.src = dg.src
                  GROUP BY e.dst),
-        r{k} AS (SELECT nd.node,
+        r{k} AS MATERIALIZED (SELECT nd.node,
                         CAST({tele} AS DOUBLE) / nn.n
                         + CAST({d} AS DOUBLE) * d{k}.dang / nn.n
                         + CAST({d} AS DOUBLE)

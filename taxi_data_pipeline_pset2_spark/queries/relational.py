@@ -471,8 +471,8 @@ def integrity_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact keys missing from the dim via a left-anti join against a
     broadcast dim (no shuffle), and duplicate-key groups via count>1.
     Healthy data returns 0 rows. The union-with-check_name shape is the
-    same one ``quality.run_tests`` uses to fire the whole suite as a
-    single Spark job."""
+    same one ``quality.run_tests`` uses to count the whole suite with
+    one aggregate."""
     orders = t(spark, sf_dir, "orders")
     customer = t(spark, sf_dir, "customer")
     fk = (

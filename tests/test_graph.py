@@ -578,6 +578,28 @@ def test_kcore_lpa_driver_fast_path_matches_distributed(spark):
     assert lp_fast == lp_dist
 
 
+@pytest.mark.parametrize("driver_edge_cap", [None, 0])
+@pytest.mark.parametrize(
+    "edges", [[], [("v0", "v0"), ("v1", None)]], ids=["no_edges", "all_cleaned_away"]
+)
+def test_kcore_lpa_empty_graph_both_paths(spark, edges, driver_edge_cap):
+    """An empty cleaned edge set (no rows, or only self-loops and NULL
+    endpoints) gives an empty result on the driver fast path (default
+    cap) and on the distributed loop (cap 0) alike."""
+    from taxi_data_pipeline_pset2_spark.operators.graph import (
+        kcore,
+        label_propagation,
+    )
+
+    df = spark.createDataFrame(edges, "src string, dst string")
+    cap = {} if driver_edge_cap is None else {"driver_edge_cap": driver_edge_cap}
+    stats: dict = {}
+    kc = kcore(df, stats_out=stats, **cap)
+    assert kc.collect() == [] and kc.columns == ["node", "core"]
+    lp = label_propagation(df, n_iter=3, **cap)
+    assert lp.collect() == [] and lp.columns == ["node", "label"]
+
+
 def test_pagerank_shuffle_partitions_equivalence(spark):
     """shuffle_partitions is an execution knob, never a semantics knob:
     any value returns the identical table, and the session conf is

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from taxi_data_pipeline_pset2_spark.plans.dag import taxi_pipeline
 from taxi_data_pipeline_pset2_spark.quality import run_tests, taxi_test_suite
@@ -37,6 +38,44 @@ def test_row_flow(medallion):
     assert 0 < fct_n <= stg_n
     assert medallion["dim_date"].count() == 4018
     assert medallion["dim_zone"].count() == 266  # 265 + Unknown member
+
+
+def test_dim_date_sk_is_day_number_in_date_order(medallion):
+    from datetime import date, timedelta
+
+    rows = medallion["dim_date"].orderBy("date_actual").collect()
+    assert [r.date_sk for r in rows] == list(range(1, 4019))
+    assert [r.date_actual for r in rows] == [
+        date(2015, 1, 1) + timedelta(days=i) for i in range(4018)
+    ]
+
+
+def test_static_dims_are_local_relations_with_declared_schema(spark):
+    """The literal dims plan as local table scans (no Python RDD) and
+    keep the declared types, every column nullable."""
+    from taxi_data_pipeline_pset2_spark.plans.taxi_models import (
+        dim_payment_type,
+        dim_rate_code,
+        dim_zone,
+    )
+
+    expected = {
+        "payment_type": "payment_type_sk int, payment_type_id int, "
+        "payment_type_name string, expects_tip boolean",
+        "rate_code": "rate_code_sk int, rate_code_id int, rate_code_name string",
+    }
+    for name, df in [("payment_type", dim_payment_type(spark)),
+                     ("rate_code", dim_rate_code(spark))]:
+        declared = [(f.name, f.dataType, True) for f in StructType.fromDDL(expected[name])]
+        assert [(f.name, f.dataType, f.nullable) for f in df.schema][:-1] == declared
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+        assert df.count() == 7
+    zone = dim_zone(gen_zones(spark))
+    assert "ExistingRDD" not in zone._jdf.queryExecution().executedPlan().toString()
+    assert all(f.nullable for f in zone.schema if f.name != "dbt_loaded_at")
+    unknown = zone.filter(F.col("zone_sk") == 0).collect()
+    assert [tuple(r)[:6] for r in unknown] == [(0, -1, "Unknown", "Unknown", "Unknown", False)]
 
 
 def test_quality_suite_all_pass(medallion):
@@ -383,3 +422,93 @@ def test_dag_cycle_and_unknown_dep_rejected():
     missing.add(Node("a", lambda spark, **kw: None, deps=("ghost",)))
     with _pytest.raises(ValueError, match="unknown node"):
         missing._topo_order()
+
+
+def test_table_nodes_report_rows_and_keep_schema(spark, tmp_path):
+    """A table node's row count and re-read schema come from the frame it
+    wrote: right for empty nodes (a partitioned one writes no parquet
+    file to infer a schema from) and, for a partitioned + sorted node,
+    equal to an inferred re-read, partition column last."""
+    from taxi_data_pipeline_pset2_spark.plans.dag import Node, Pipeline
+
+    wh = str(tmp_path / "wh_edges")
+    src = spark.range(100).select(
+        "id",
+        F.when(F.col("id") % 3 == 0, "green").otherwise("yellow").alias("service_type"),
+        (F.col("id") * 2.5).alias("v"),
+    )
+    built, results = (
+        Pipeline(wh)
+        .add(Node("none", lambda spark: src.filter(F.lit(False))))
+        .add(Node("limit0", lambda spark: src.limit(0)))
+        .add(Node("none_part", lambda spark: src.filter(F.lit(False)),
+                  partition_by=("service_type",)))
+        .add(Node("part", lambda spark: src, partition_by=("service_type",),
+                  sort_within_partitions_by=("v",)))
+        .run(spark)
+    )
+    assert [(r.name, r.status, r.rows) for r in results] == [
+        ("none", "success", 0), ("limit0", "success", 0),
+        ("none_part", "success", 0), ("part", "success", 100),
+    ]
+    for name in ("none", "limit0", "part"):
+        inferred = spark.read.parquet(f"{wh}/{name}")
+        assert built[name].schema == inferred.schema, name
+        assert built[name].count() == inferred.count()
+    assert built["part"].columns == ["id", "v", "service_type"]
+    assert built["none_part"].columns == ["id", "v", "service_type"]
+    assert built["none_part"].count() == 0
+
+
+def test_failing_node_reports_failed(spark, tmp_path):
+    from taxi_data_pipeline_pset2_spark.plans import dag
+
+    node = dag.Node("bad", lambda spark: spark.range(3).select(F.raise_error(F.lit("boom"))))
+    pipe = dag.Pipeline(str(tmp_path / "wh_fail")).add(node)
+    with pytest.raises(dag._NodeFailure) as failure:
+        pipe._run_node(spark, node, {})
+    assert failure.value.result.status == "failed"
+    assert "boom" in failure.value.result.error
+    with pytest.raises(Exception, match="boom"):
+        pipe.run(spark)
+
+
+def test_run_tests_counts_equal_standalone_violations(medallion):
+    """On tables with planted NULL keys and bad service types (some rows
+    failing several tests at once), each of the 32 results counts
+    exactly the rows of that test's own violation frame."""
+    def dirty(df, key_cols, cols):
+        h = F.pmod(F.xxhash64(*key_cols), F.lit(97))
+        out = df.withColumn("_h", h).withColumn(
+            "service_type",
+            F.when(F.col("_h") % 11 == 1, F.lit("purple")).otherwise(F.col("service_type")),
+        )
+        for i, c in enumerate(cols):
+            out = out.withColumn(c, F.when(F.col("_h") % (i + 2) == 0, None).otherwise(F.col(c)))
+        return out.drop("_h")
+
+    tables = dict(medallion)
+    tables["stg_trips_unified"] = dirty(
+        medallion["stg_trips_unified"],
+        ["pickup_datetime", "dropoff_datetime", "total_amount", "pulocationid"],
+        ["service_type", "pickup_datetime", "fare_amount"],
+    )
+    tables["fct_trips"] = dirty(
+        medallion["fct_trips"],
+        ["trip_id"],
+        ["trip_id", "pickup_zone_sk", "service_type", "total_amount"],
+    )
+    cases = taxi_test_suite(tables)
+    results = run_tests(cases)
+    assert [r.name for r in results] == list(cases)
+    for r in results:
+        n = cases[r.name].count()
+        assert (r.failing_rows, r.passed) == (n, n == 0), r.name
+    failed = {r.name for r in results if not r.passed}
+    assert {
+        "not_null__stg__service_type", "not_null__stg__pickup_datetime",
+        "not_null__stg__fare_amount", "accepted_values__stg__service_type",
+        "not_null__fct__trip_id", "not_null__fct__pickup_zone_sk",
+        "not_null__fct__service_type", "not_null__fct__total_amount",
+        "accepted_values__fct__service_type",
+    } <= failed
